@@ -1,7 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.mutable
+import Main.jsonString
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
@@ -144,12 +144,7 @@ object Bench {
     val outPath = Paths.get("target/bench.json")
     Files.createDirectories(outPath.getParent)
     Files.deleteIfExists(outPath) // stale-file trap: a timeout must never leave last round's numbers
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Fixture drift is loud, not silent (the round-8 lesson): one stderr
     // line per contract mismatch, before any query runs.
@@ -159,18 +154,6 @@ object Bench {
       .filter(name => only.forall(_.contains(name)))
       .sortBy(name => (CostHint.getOrElse(name, 3.0), name))
 
-    // Full JSON string escape (matches Verify's): every control char
-    // < 0x20 goes to \u%04x — an exception message carrying raw bytes
-    // must never make the artifact unparsable.
-    def jsonStr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Locale-independent decimal rendering (a comma-decimal default
     // locale would corrupt the JSON).
     def num(v: Double, digits: Int): String =
@@ -304,9 +287,9 @@ object Bench {
       }
       val errors = names.filter(n => !okBest.contains(n))
         .map(n => n -> failLast(n)._2)
-      val qs = results.map { case (k, v) => jsonStr(k) + ":" + v }
+      val qs = results.map { case (k, v) => jsonString(k) + ":" + v }
         .mkString("{", ",", "}")
-      val errs = errors.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+      val errs = errors.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
         .mkString("{", ",", "}")
       val total = results.map(_._2).sum
       val coldTotal = coldTimes.values.sum
@@ -343,7 +326,7 @@ object Bench {
         val w = okWorst(n)
         val cold = coldTimes.getOrElse(n, okBest.getOrElse(n, w))
         if (w >= 2 * cold && w >= 2.0)
-          Some(jsonStr(n) + ":" + num(w / math.max(cold, 1e-9), 1)) else None
+          Some(jsonString(n) + ":" + num(w / math.max(cold, 1e-9), 1)) else None
       }.mkString("{", ",", "}")
       // Self-explaining contention fields (r16, VERDICT r15 #1):
       // `solo_min`/`solo_canary` carry the post-suite solo retest of
@@ -354,13 +337,13 @@ object Bench {
       // Normalization only CORRECTS contention (factor capped at 1):
       // a faster-than-reference host must not inflate its own number.
       val soloJson = soloMin.toSeq.sortBy(_._1)
-        .map { case (k, v) => jsonStr(k) + ":" + num(v, 3) }
+        .map { case (k, v) => jsonString(k) + ":" + num(v, 3) }
         .mkString("{", ",", "}")
       val soloCanaryJson = soloCanaryAt.toSeq.sortBy(_._1)
-        .map { case (k, v) => jsonStr(k) + ":" + num(v, 3) }
+        .map { case (k, v) => jsonString(k) + ":" + num(v, 3) }
         .mkString("{", ",", "}")
       val soloSkippedJson =
-        soloSkipped.sorted.map(jsonStr).mkString("[", ",", "]")
+        soloSkipped.sorted.map(jsonString).mkString("[", ",", "]")
       val adjTotal = results.map { case (n, v) =>
         math.min(v, soloMin.getOrElse(n, v))
       }.sum

@@ -150,18 +150,22 @@ object Main {
   }
 
   /** The orchestrator payload (export.py:333–336), JSON-escaped. */
-  def resultJson(query: String, lastCommitMs: Long): String = {
-    val q = query.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    s"""{"query": "$q", "change_capture_sync_last_commit_ms": $lastCommitMs}"""
-  }
+  def resultJson(query: String, lastCommitMs: Long): String =
+    s"""{"query": ${jsonString(query)}, "change_capture_sync_last_commit_ms": $lastCommitMs}"""
+
+  /** `s` as a quoted JSON string: backslash, quote and EVERY control
+    * char below 0x20 escaped — a tab or CR in a query, an exception
+    * message or oracle SQL must never make the output unparsable.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)

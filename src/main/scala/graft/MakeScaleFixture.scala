@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * deterministic: no driver-side row building, no RNG state — the same
   * (id, multiplier) always yields the same row on any partitioning.
   *
-  * Usage: `runMain graft.MakeScaleFixture <outDir> <multiplier>`
-  * (base sizes: 5000 documents / 2000 embeddings, the sf0.1 shape).
+  * [[MakeSf]] writes these tables at every SF (base sizes: 5000
+  * documents / 2000 embeddings, the sf0.1 shape).
   */
 object MakeScaleFixture {
 
@@ -86,19 +86,5 @@ object MakeScaleFixture {
       id.as("vec_id"),
       transform(raw, v => (v / norm).cast("float")).as("embedding"),
       label.as("label"))
-  }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: MakeScaleFixture <outDir> <multiplier>")
-    val outDir = args(0)
-    val mult = args(1).toLong
-    val spark = Engine.session()
-    spark.sparkContext.setLogLevel("WARN")
-    documents(spark, 5000L * mult)
-      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    embeddings(spark, 2000L * mult)
-      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    println(s"""{"outDir":"$outDir","multiplier":$mult,"documents":${5000L * mult},"embeddings":${2000L * mult}}""")
-    spark.stop()
   }
 }

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Generation is expression-level over `spark.range` (xxhash64-seeded,
   * the [[MakeScaleFixture]] discipline): distributed, deterministic,
   * no driver-side rows. documents/embeddings delegate to
-  * [[MakeScaleFixture]] (same generator as the 10×/100× rehearsals).
+  * [[MakeScaleFixture]].
   *
   * Usage: `runMain graft.MakeSf <outDir> <multiplier>` — multiplier 1
   * ≙ sf0.1 row counts (600 k lineitem), 10 ≙ sf1.0 (6 M lineitem).

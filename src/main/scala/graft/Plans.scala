@@ -1,14 +1,28 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Diagnostic main: dumps `explain("formatted")` for the headline
-  * queries to target/plans.txt — the plan-audit loop behind BASELINE.md.
+/** Plan dumper: writes `explain("formatted")` for the named queries to
+  * one file each — the plan-evidence artifacts the optimization rounds
+  * commit (`plans/r<N>/<query>_<tag>.txt`), so plan claims can be
+  * checked without running Spark.
+  *
+  * Each query runs before its plan is dumped, so the file holds the
+  * FINAL adaptive plan (isFinalPlan=true, ReusedExchange visible) — the
+  * shape to audit, not the pre-AQE initial plan. With no query names the
+  * headline list is dumped.
+  *
+  * Usage: runMain graft.Plans <dataDir> <outDir> <tag> [q1 q2 ...]
+  *   → <outDir>/<q1>_<tag>.txt ...
   */
 object Plans {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 3, "usage: Plans <dataDir> <outDir> <tag> [q1 q2 ...]")
     val spark = Engine.session("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.01"
-    val names = Seq("q_time_based", "q_join_revenue", "q_scd_latest", "q_scd_latest_maxby",
+    val d = args(0)
+    val outDir = Paths.get(args(1))
+    val tag = args(2)
+    Files.createDirectories(outDir)
+    val headline = Seq("q_time_based", "q_join_revenue", "q_scd_latest", "q_scd_latest_maxby",
       "q_ann_bruteforce", "q_dedup_minhash_lsh", "q_dedup_exact", "q_topk_orders", "q_mm_decode",
       "q_funnel", "q_dedup_embedding_lsh", "q_dedup_simhash", "q_ann_ivf", "q_sessionize",
       "q_pipeline_prep", "q_emb_quantize", "q_asof_join", "q_range_join",
@@ -32,17 +46,21 @@ object Plans {
       // round-16 tiered oracle twins
       "q_scd_latest_tiered", "q_scd_latest_keys", "q_cdc_sync_tiered",
       "q_dedup_minhash_tiered", "q_hll_tiered")
-    val sb = new StringBuilder
+    val names = if (args.length > 3) args.toSeq.drop(3) else headline
     names.foreach { n =>
-      sb.append(s"\n========== $n ==========\n")
+      val out = outDir.resolve(s"${n}_$tag.txt")
       try {
         val df = SparkEntry.queries(n)(spark, d)
-        sb.append(df.queryExecution.explainString(
+        spark.sparkContext.runJob(df.queryExecution.toRdd,
+          (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => it.size)
+        Files.writeString(out, df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-      } catch { case e: Throwable => sb.append("ERROR " + e) }
+        println(s"WROTE $out")
+      } catch { case e: Throwable =>
+        Files.writeString(out, s"ERROR $e")
+        println(s"ERROR $n: $e")
+      }
     }
-    Files.writeString(Paths.get("target/plans.txt"), sb.toString)
-    println("WROTE target/plans.txt")
     spark.stop()
   }
 }

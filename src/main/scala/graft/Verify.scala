@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import Main.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -14,31 +14,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Fixture drift is loud, not silent (the round-8 lesson): one stderr
     // line per contract mismatch, before any query runs.
     FixtureProbe.report(spark, sfDir)
     new java.io.File(outDir).mkdirs()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Dev aid: SPARK_GRAFT_VERIFY_ONLY=q_a,q_b restricts the dump (the
     // driver never sets it). oracle_sql.json stays complete either way.
@@ -117,11 +100,11 @@ object Verify {
           val sorted = steady.sorted
           sorted.last / math.max(sorted(sorted.size / 2), 1e-9)
         } else 1.0
-      val qs = timings.map { case (k, v) => s"${q(k)}:${num(v)}" }
+      val qs = timings.map { case (k, v) => s"${jsonString(k)}:${num(v)}" }
         .mkString("{", ",", "}")
       val cs = canaries.map(num).mkString("[", ",", "]")
       val wr = warmRatios.map { case (k, v) =>
-        s"${q(k)}:${String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))}"
+        s"${jsonString(k)}:${String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))}"
       }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/verify_timing.json"),
         s"""{"queries":$qs,"canary":$cs,"canary_wave_ratio":${num(wave)},"warm_regressions":$wr}""" + "\n")

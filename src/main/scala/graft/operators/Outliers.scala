@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * key is the µ-quantized d² with the id as tie-break. Since r14 the
   * exact sums are salted long LIMB sums (see [[mahalanobis2]]) — the
   * same integers the previous decimal(38,0) formulation produced
-  * (RehearseMahalanobis pins the equality bitwise), with zero per-row
-  * Decimal work.
+  * (OutliersSpec pins the equality bitwise), with zero per-row Decimal
+  * work.
   *
   * Scale shape: ONE map-side-combinable moment aggregate (partition-
   * local salt groups of ≤ 2^24 rows each, then a 6-number decimal
@@ -72,7 +72,8 @@ object Outliers {
     // previous shape quantized to decimal(38,0) and summed decimals —
     // once Σx² left the compact-long range every partial-agg add ran
     // on boxed BigDecimals, the operator's one interpreted hot loop
-    // (and its sticky-JIT episode surface; RehearseMahalanobis A/B).
+    // (and its sticky-JIT episode surface — BASELINE.md, "q_mahalanobis
+    // root cause and fix").
     // The exact moments now come from SALTED LIMB SUMS: per salt group
     // (mid >> 24 — see GroupShift) eleven long sums of the 2^19-limb
     // products. Capacity (r15, corrected): with |x| < 2^37 the worst
@@ -82,43 +83,14 @@ object Outliers {
     // the 2^24 bound holds structurally for ANY corpus size or id
     // distribution. Then ONE decimal combine over the group rows
     // (~1 per 16.7M rows, plus one per partition) reconstructs
-    // Σx², Σy², Σxy exactly.
-    // RehearseMahalanobis pins the reconstruction bitwise against the
-    // decimal formulation at sf0.1, so the oracle is unchanged.
+    // Σx², Σy², Σxy exactly (see [[limbMoments]]).
+    // OutliersSpec pins the reconstruction bitwise against the decimal
+    // formulation, so the oracle is unchanged.
     def mu(c: String) =
       floor(col(c).cast("double") * 1e6 + 0.5).cast("long")
     val base = df.select(col(idCol).cast("long").as("_id"),
       mu(xCol).as("_x"), mu(yCol).as("_y"))
-    val s = LimbShift
-    val mask = (1L << s) - 1L
-    val grouped = base
-      .withColumn("_g", shiftright(monotonically_increasing_id(), GroupShift))
-      .withColumn("_xa", shiftright(col("_x"), s))
-      .withColumn("_xb", col("_x").bitwiseAND(mask))
-      .withColumn("_ya", shiftright(col("_y"), s))
-      .withColumn("_yb", col("_y").bitwiseAND(mask))
-      .groupBy("_g").agg(
-        count(lit(1L)).as("n"),
-        sum(col("_x")).as("sx"), sum(col("_y")).as("sy"),
-        sum(col("_xa") * col("_xa")).as("xaa"),
-        sum(col("_xa") * col("_xb")).as("xab"),
-        sum(col("_xb") * col("_xb")).as("xbb"),
-        sum(col("_ya") * col("_ya")).as("yaa"),
-        sum(col("_ya") * col("_yb")).as("yab"),
-        sum(col("_yb") * col("_yb")).as("ybb"),
-        sum(col("_xa") * col("_ya")).as("paa"),
-        sum(col("_xa") * col("_yb") + col("_xb") * col("_ya")).as("pab"),
-        sum(col("_xb") * col("_yb")).as("pbb"))
-    def dec(c: String) = col(c).cast("decimal(38,0)")
-    val two = lit(2L).cast("decimal(38,0)")
-    val sq = lit(1L << (2 * s)).cast("decimal(38,0)")
-    val hf = lit(1L << s).cast("decimal(38,0)")
-    val moments = grouped.agg(
-      sum(col("n")).as("_n"),
-      sum(dec("sx")).as("_sx"), sum(dec("sy")).as("_sy"),
-      sum(dec("xaa") * sq + two * dec("xab") * hf + dec("xbb")).as("_sxx"),
-      sum(dec("yaa") * sq + two * dec("yab") * hf + dec("ybb")).as("_syy"),
-      sum(dec("paa") * sq + dec("pab") * hf + dec("pbb")).as("_sxy"))
+    val moments = limbMoments(base)
     def d(c: org.apache.spark.sql.Column) = c.cast("double")
     val scored = base.crossJoin(broadcast(moments))
     val nD = d(col("_n"))
@@ -143,6 +115,45 @@ object Outliers {
         round(d(col("_x")) / 1e6, 6).as(xCol),
         round(d(col("_y")) / 1e6, 6).as(yCol),
         round(d(col("_m")) / 1e6, 6).as("md2"))
+  }
+
+  /** The exact moments (`_n`, `_sx`, `_sy`, `_sxx`, `_syy`, `_sxy`, all
+    * decimal(38,0) but `_n`) of the µ-quantized long columns `_x`, `_y`
+    * of `base`: eleven salted long limb sums per salt group, then one
+    * decimal combine — the same integers a per-row decimal(38,0)
+    * aggregate produces.
+    */
+  private[graft] def limbMoments(base: DataFrame): DataFrame = {
+    val s = LimbShift
+    val mask = (1L << s) - 1L
+    val grouped = base
+      .withColumn("_g", shiftright(monotonically_increasing_id(), GroupShift))
+      .withColumn("_xa", shiftright(col("_x"), s))
+      .withColumn("_xb", col("_x").bitwiseAND(mask))
+      .withColumn("_ya", shiftright(col("_y"), s))
+      .withColumn("_yb", col("_y").bitwiseAND(mask))
+      .groupBy("_g").agg(
+        count(lit(1L)).as("n"),
+        sum(col("_x")).as("sx"), sum(col("_y")).as("sy"),
+        sum(col("_xa") * col("_xa")).as("xaa"),
+        sum(col("_xa") * col("_xb")).as("xab"),
+        sum(col("_xb") * col("_xb")).as("xbb"),
+        sum(col("_ya") * col("_ya")).as("yaa"),
+        sum(col("_ya") * col("_yb")).as("yab"),
+        sum(col("_yb") * col("_yb")).as("ybb"),
+        sum(col("_xa") * col("_ya")).as("paa"),
+        sum(col("_xa") * col("_yb") + col("_xb") * col("_ya")).as("pab"),
+        sum(col("_xb") * col("_yb")).as("pbb"))
+    def dec(c: String) = col(c).cast("decimal(38,0)")
+    val two = lit(2L).cast("decimal(38,0)")
+    val sq = lit(1L << (2 * s)).cast("decimal(38,0)")
+    val hf = lit(1L << s).cast("decimal(38,0)")
+    grouped.agg(
+      sum(col("n")).as("_n"),
+      sum(dec("sx")).as("_sx"), sum(dec("sy")).as("_sy"),
+      sum(dec("xaa") * sq + two * dec("xab") * hf + dec("xbb")).as("_sxx"),
+      sum(dec("yaa") * sq + two * dec("yab") * hf + dec("ybb")).as("_syy"),
+      sum(dec("paa") * sq + dec("pab") * hf + dec("pbb")).as("_sxy"))
   }
 
   /** GENERAL-d Mahalanobis scoring over a vector column (r16, VERDICT

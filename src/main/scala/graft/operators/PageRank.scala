@@ -182,6 +182,13 @@ object PageRank {
       s"personalized: bad iters=$iters / dampPct=$dampPct")
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
       .localCheckpoint()
+    val nodes = e.select(col("_src").as("node"))
+      .union(e.select(col("_dst").as("node"))).distinct()
+    // Seeds outside the graph never rank: the semi-join drops them (and
+    // null seeds) before either tier reads the seed table, so the local
+    // tier's seed collect is bounded by the node count (≤ 2 × edges).
+    val graphSeeds = seeds.select(col(seedCol).as("node")).distinct()
+      .join(nodes, Seq("node"), "left_semi")
     // DRIVER-LOCAL TIER — the [[ranksWith]] replica with the seeded
     // teleport: tele(mass) = mass div |seeds∩nodes| on seeds, 0
     // elsewhere; identical integer chain, same Spark round at the end.
@@ -191,13 +198,10 @@ object PageRank {
           org.apache.spark.sql.types.LongType &&
         e.count() <= localMaxEdges) {
       val rows = e.collect()
-      val seedRows = seeds.select(col(seedCol)).distinct().collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) &&
-          seedRows.forall(r => !r.isNullAt(0))) {
+      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
         val el = rows.map(r => (r.getLong(0), r.getLong(1)))
         val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
-        val nodeSet = nodesL.toSet
-        val seedSet = seedRows.map(_.getLong(0)).toSet.intersect(nodeSet)
+        val seedSet = graphSeeds.collect().map(_.getLong(0)).toSet
         val ns = math.max(seedSet.size.toLong, 1L) // |seeds|=0 ⇒ all-zero ranks either way
         val outdeg = new java.util.HashMap[Long, Long]()
         el.foreach(t => outdeg.merge(t._1, 1L, _ + _))
@@ -220,10 +224,7 @@ object PageRank {
           nodesL.map(nd => (nd, r.get(nd))), scale)
       }
     }
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node"))).distinct()
-    val seed = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi").localCheckpoint()
+    val seed = graphSeeds.localCheckpoint()
     val flagged = nodes
       .join(seed.withColumn("_s", lit(1)), Seq("node"), "left")
       .select(col("node"), col("_s").isNotNull.as("_isSeed"))

@@ -29,6 +29,29 @@ class OutliersSpec extends AnyFunSuite with SparkTestBase {
     assert(top2.map(_._1).toSeq == out.map(_._1).take(2).toSeq)
   }
 
+  test("mahalanobis2: salted long-limb moments equal the decimal(38,0) sums bit for bit") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // µ-quantized values near the 2^37 limb bound, both signs: one x² is
+    // already ~1.9e22, so Σx² leaves the long range and only the exact
+    // reconstruction can match the decimal sums.
+    val bound = (1L << 37) - 1L
+    val base = (0 until 2000).map { i =>
+      val x = bound - (i * 7919L) % 1000003L
+      val y = bound - (i * 104729L) % 9999991L
+      (i.toLong, if (i % 3 == 0) -x else x, if (i % 5 == 0) -y else y)
+    }.toDF("_id", "_x", "_y").repartition(4)
+    def dec(c: String) = col(c).cast("decimal(38,0)")
+    val exact = base.agg(
+      count(lit(1L)), sum(dec("_x")), sum(dec("_y")),
+      sum(dec("_x") * dec("_x")), sum(dec("_y") * dec("_y")),
+      sum(dec("_x") * dec("_y"))).head()
+    val limb = Outliers.limbMoments(base).head()
+    def asBig(r: org.apache.spark.sql.Row) = r.toSeq.map(v => BigDecimal(v.toString))
+    assert(asBig(limb) == asBig(exact))
+    assert(asBig(exact)(3) > BigDecimal(Long.MaxValue))
+  }
+
   test("mahalanobis2: singular covariance (constant column) yields null scores") {
     import spark.implicits._
     val flat = Seq((1L, 1.0, 7.0), (2L, 2.0, 7.0), (3L, 3.0, 7.0))

@@ -91,5 +91,16 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
       "node", 4, 85L, PageRank.DefaultScale, 0L)
       .as[(Long, Double)].collect().toMap
     assert(localP == distP, s"personalized: $localP != $distP")
+    // A seed table larger than the local ceiling, almost all of it
+    // outside the graph: the local tier still runs (only in-graph seeds
+    // reach the driver) and ranks as the distributed loop does.
+    val manySeeds = (Seq(2L, 3L) ++ (100L until 150L)).toDF("node")
+    val localMany = PageRank.personalizedWith(edges, "src", "dst", manySeeds,
+      "node", 4, 85L, PageRank.DefaultScale, el.size.toLong)
+      .as[(Long, Double)].collect().toMap
+    val distMany = PageRank.personalizedWith(edges, "src", "dst", manySeeds,
+      "node", 4, 85L, PageRank.DefaultScale, 0L)
+      .as[(Long, Double)].collect().toMap
+    assert(localMany == distMany, s"many seeds: $localMany != $distMany")
   }
 }
